@@ -2005,7 +2005,7 @@ def test_rewrite_manifests_preserves_reads_and_torn_invisible(spark, sf_dir):
     cur = os.path.join(base, "CURRENT")
     if os.path.exists(cur):
         os.remove(cur)
-    fmt._MAN_COMPACT_CACHE.clear()
+    fmt._compact_logs.cache_clear()
     torn = os.path.join(base, "manifest-rewrite")
     os.makedirs(torn, exist_ok=True)
     with open(os.path.join(torn, "base-manifest.parquet"), "wb") as f:

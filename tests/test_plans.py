@@ -67,10 +67,9 @@ def test_manifest_pruned_read_scans_fewer_files(spark, sf_dir):
     month files out of the ~80-file table — file skipping, not a
     post-scan filter."""
     df = REGISTRY["q_read_manifest_pruned"].fn(spark, sf_dir)
-    from ex_aws_firehose_spark.sources.formats import _MANIFEST_CACHE
+    from ex_aws_firehose_spark.sources.formats import _stage_manifest_table
 
-    key = _MANIFEST_CACHE.scoped_key(spark, sf_dir)
-    _root, _manifest, files_total = _MANIFEST_CACHE[key]
+    _root, _manifest, files_total = _stage_manifest_table(spark, sf_dir)
     scanned = [f for f in df.inputFiles() if "orders_manifest_" in f]
     assert 0 < len(scanned) < files_total, (len(scanned), files_total)
     assert len(scanned) == 3, scanned  # Jan/Feb/Mar 1997 month files
@@ -85,13 +84,12 @@ def test_bloom_pruned_read_scans_fewer_files(spark, sf_dir):
     negatives)."""
     df = REGISTRY["q_read_bloom_pruned"].fn(spark, sf_dir)
     from ex_aws_firehose_spark.sources.formats import (
-        _MANIFEST_CACHE,
         BLOOM_PROBE_CUSTKEY,
+        _stage_manifest_table,
     )
     from ex_aws_firehose_spark.tables import load_table
 
-    key = _MANIFEST_CACHE.scoped_key(spark, sf_dir)
-    _root, _manifest, files_total = _MANIFEST_CACHE[key]
+    _root, _manifest, files_total = _stage_manifest_table(spark, sf_dir)
     scanned = {
         f.split("month=")[1].split("/")[0]
         for f in df.inputFiles()
@@ -1223,9 +1221,9 @@ def test_reingest_fold_matches_loop(spark, sf_dir):
     per-round running sum, deliver the prefix that fits, give up at
     the attempt bound) on a synthetic tail exercising: exact-threshold
     fit, bin rollover, an over-threshold blocker that bricks the queue
-    behind it, and a queue long enough to outlast the attempt bound."""
-    from pyspark.sql import functions as F
-
+    behind it, a queue long enough to outlast the attempt bound, and a
+    malformed record whose NULL data must count as size 0 (as the old
+    window sum skipped NULLs) instead of poisoning the running sum."""
     from ex_aws_firehose_spark.operators.firehose import reingest
 
     thr, max_att = 10, 5
@@ -1235,15 +1233,16 @@ def test_reingest_fold_matches_loop(spark, sf_dir):
         (0, "s1", "Ok", "xxxx"),
         (1, "s2", "ProcessingFailed", "yyyy"),
         # dropped tail: record_id length counts toward sz too
-        (2, "a", "Dropped", "x" * 4),     # sz 5, fits bin 1
-        (3, "b", "Dropped", "x" * 4),     # sz 5, closes bin 1 (== thr)
-        (4, "c", "Dropped", "x" * 6),     # sz 7, bin 2
-        (5, "d", "Dropped", "x" * 2),     # sz 3, bin 2 (== thr)
-        (6, "e", "Dropped", "x" * 8),     # sz 9, bin 3
-        (7, "f", "Dropped", "x" * 9),     # sz 10, bin 4 — attempt 5 = bound
-        (8, "g", "Dropped", "x" * 1),     # sz 2, bin 4 — outlasts? fits bin 4
-        (9, "h", "Dropped", "x" * 30),    # sz 31 > thr: BLOCKS
-        (10, "i", "Dropped", "x" * 1),    # behind the blocker: never moves
+        (2, "n", "Dropped", None),        # NULL data: sz 0, fits bin 1
+        (3, "a", "Dropped", "x" * 4),     # sz 5, fits bin 1
+        (4, "b", "Dropped", "x" * 4),     # sz 5, closes bin 1 (== thr)
+        (5, "c", "Dropped", "x" * 6),     # sz 7, bin 2
+        (6, "d", "Dropped", "x" * 2),     # sz 3, bin 2 (== thr)
+        (7, "e", "Dropped", "x" * 8),     # sz 9, bin 3
+        (8, "f", "Dropped", "x" * 9),     # sz 10, bin 4 — attempt 5 = bound
+        (9, "g", "Dropped", "x" * 1),     # sz 2, bin 4 — outlasts? fits bin 4
+        (10, "h", "Dropped", "x" * 30),   # sz 31 > thr: BLOCKS
+        (11, "i", "Dropped", "x" * 1),    # behind the blocker: never moves
     ]
     split_df = spark.createDataFrame(
         rows, "idx long, record_id string, result string, data string"
@@ -1254,7 +1253,11 @@ def test_reingest_fold_matches_loop(spark, sf_dir):
     }
 
     # reference: the literal per-round loop
-    pend = [(i, rid, len(d) + len(rid)) for i, rid, res, d in rows if res == "Dropped"]
+    pend = [
+        (i, rid, 0 if d is None else len(d) + len(rid))
+        for i, rid, res, d in rows
+        if res == "Dropped"
+    ]
     exp = {rid: (res, 1) for _, rid, res, _d in rows if res != "Dropped"}
     attempt = 1
     while attempt < max_att and pend:
